@@ -2,7 +2,9 @@ package graft.cli
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 
 import graft.GraftSession
 import graft.extract._
@@ -29,8 +31,8 @@ object CliUtil {
   }
 }
 
-/** `orderly.extract` equivalent: ORD .pb.gz directory → per-source parquet
-  * (array-typed + wide flavours) + unresolved-names CSV + config audit. */
+/** `orderly.extract` equivalent: ORD .pb.gz directory → per-source
+  * numbered-wide parquet (the format `CleanMain` reads) + config audit. */
 object ExtractMain {
   def main(args: Array[String]): Unit = {
     val Array(ordDir, outDir) = args.take(2)
@@ -38,11 +40,8 @@ object ExtractMain {
     val spark = GraftSession.local()
     val cfg = ExtractConfig(trustLabelling = trustLabelling)
     val nested = OrdSource.readNested(spark, ordDir)
-    val extracted = Extract.extractReactions(
-      nested, cfg, IdentityChemistry, solventSet = Seq("O", "CO", "CCO"))
-    extracted.write.mode("overwrite")
-      .partitionBy("extracted_from_file")
-      .parquet(s"$outDir/extracted_ords")
+    writeExtracted(Extract.extractReactions(
+      nested, cfg, IdentityChemistry, solventSet = Seq("O", "CO", "CCO")), outDir)
     CliUtil.writeConfigJson(outDir, "extract_config.json",
       "trust_labelling" -> cfg.trustLabelling,
       "consider_molecule_names" -> cfg.considerMoleculeNames,
@@ -51,6 +50,25 @@ object ExtractMain {
       "use_labelling_if_extract_fails" -> cfg.useLabellingIfExtractFails,
       "ord_dir" -> ordDir)
     spark.stop()
+  }
+
+  /** Writes `extracted` to `outDir/extracted_ords` in the numbered-wide
+    * format the reference's stages exchange (E23), one directory per source
+    * file, which [[ReactionTable.load]] reads back. Each list column is as
+    * wide as its longest list in the data, so no element is cut. The
+    * extracted rows are a lazy local checkpoint: the width scan computes
+    * them and the write reads them back. */
+  def writeExtracted(extracted: DataFrame, outDir: String): Unit = {
+    val ex = extracted.localCheckpoint(eager = false)
+    val lists = ex.schema.fields.collect {
+      case f if f.dataType.isInstanceOf[ArrayType] => f.name
+    }.toSeq
+    val longest = ex.select(lists.map(c => max(size(col(c)))): _*).head()
+    val widths = lists.zipWithIndex.map { case (c, i) =>
+      c -> (if (longest.isNullAt(i)) 0 else math.max(longest.getInt(i), 0)) }.toMap
+    Extract.toWideSink(ex, widths).write.mode("overwrite")
+      .partitionBy("extracted_from_file")
+      .parquet(s"$outDir/extracted_ords")
   }
 }
 

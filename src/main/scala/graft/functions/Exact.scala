@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Cross-engine exactness helpers.
   *
@@ -73,14 +74,11 @@ object XHash {
   def bucketSql(seed: String, n: Int, keyExprs: String*): String =
     s"(${bucketHashSql(seed, keyExprs: _*)} % $n)"
 
-  /** Driver-side evaluation of [[bucketHash]] for CONSTANT keys — lets
-    * operators embed derived pseudo-random constants (LSH plane weights,
-    * minhash masks) as literals instead of re-hashing per row. */
-  def bucketHashJvm(seed: String, keys: String*): Long = {
-    val input = (seed +: keys).mkString("\u0001")
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(input.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val hex = d.map(b => f"${b & 0xff}%02x").mkString.substring(0, 15)
-    java.lang.Long.parseLong(hex, 16)
-  }
+  /** JVM-side evaluation of [[bucketHash]] over non-null string keys, by the
+    * same digest kernel ([[graft.plans.Md5Bucket60.compute]]): derived
+    * pseudo-random constants (LSH plane weights, minhash masks) and the
+    * typed per-row kernels (fingerprint 3-grams, Morgan atom hashes). */
+  def bucketHashJvm(seed: String, keys: String*): Long =
+    graft.plans.Md5Bucket60.compute(
+      (seed +: keys).map(UTF8String.fromString).toArray)
 }

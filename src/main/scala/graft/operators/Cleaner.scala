@@ -13,7 +13,11 @@ import graft.functions.{ArrayOps, XHash}
   * Execution shape (vs the reference's fully-materialized pandas steps):
   * C2–C8 fuse into a single scan under whole-stage codegen; the only
   * shuffles are the dedup key exchange (C13), the value-counts aggregate
-  * (C9), and the split/leakage joins (C19/C20).
+  * (C9) and the leakage-move window (C20), one exchange each. The
+  * deduplicated table is a lazy local checkpoint, so the C9–C11
+  * frequent-set collect and every later write read its blocks instead of
+  * re-running scan → C8 → dedup. A local checkpoint is not fault tolerant:
+  * on a cluster, losing an executor that holds its blocks fails the job.
   */
 final case class CleanConfig(
     numReactant: Int = 5,
@@ -57,6 +61,15 @@ object Cleaner {
         part(col("yields").cast("array<string>")): _*))
   }
 
+  /** C12+C13 — keep-first dedup on [[dedupKey]], the kept row chosen by a
+    * seeded hash of `original_index` (clean/cleaner.py:767-804). */
+  private def dedup(df: DataFrame, cfg: CleanConfig): DataFrame =
+    Relational.dedupKeepFirst(
+      df.withColumn("__dk", dedupKey(df)),
+      Seq("__dk"),
+      Seq(XHash.bucketHash(cfg.seed, col("original_index").cast("string"))))
+      .drop("__dk")
+
   /** The full operator chain C2→C18 in reference order
     * (clean/cleaner.py:533-882). */
   def clean(dfIn: DataFrame, cfg: CleanConfig): DataFrame = {
@@ -95,26 +108,21 @@ object Cleaner {
     // C8 — yield consistency
     if (cfg.consistentYield) df = CleanOps.filterYieldConsistent(df, "yields")
 
-    // C12+C13 — seeded-shuffle keep-first dedup (drop a *random* duplicate)
-    df = Relational.dedupKeepFirst(
-      df.withColumn("__dk", dedupKey(df)),
-      Seq("__dk"),
-      Seq(XHash.bucketHash(cfg.seed, col("original_index").cast("string"))))
-      .drop("__dk")
+    // C12+C13 — seeded-shuffle keep-first dedup (drop a *random* duplicate).
+    // The C9–C11 frequent-set collect and then each output write read this
+    // table; the first of them fills the checkpoint and the rest reuse it.
+    df = dedup(df, cfg).localCheckpoint(eager = false)
 
     // C9/C10/C11 — rare molecules across condition columns
     if (cfg.minFrequencyOfOccurrence > 0) {
       df =
         if (cfg.mapRareMoleculesToOther)
-          CleanOps.mapRareToOtherArrays(df, conds, cfg.minFrequencyOfOccurrence)
+          // C13 again: mapping rare values to "other" can make two rows equal
+          dedup(CleanOps.mapRareToOtherArrays(df, conds, cfg.minFrequencyOfOccurrence),
+            cfg)
         else
+          // only deletes rows, so no duplicate key can appear
           CleanOps.removeRareRowsArrays(df, conds, cfg.minFrequencyOfOccurrence)
-      // C13 again — dedup may be needed after map-to-other
-      df = Relational.dedupKeepFirst(
-        df.withColumn("__dk", dedupKey(df)),
-        Seq("__dk"),
-        Seq(XHash.bucketHash(cfg.seed, col("original_index").cast("string"))))
-        .drop("__dk")
     }
 
     // C15 — per-row scramble (agents keep metal-first order, products
@@ -148,11 +156,8 @@ object Cleaner {
   def splitWithLeakageMove(df: DataFrame, cfg: CleanConfig): (DataFrame, DataFrame) = {
     val bucket = XHash.bucket(cfg.seed + "split", 100,
       col("original_index").cast("string"))
-    val withSplit = df.withColumn("__train", bucket < (cfg.trainSize * 100).toInt)
-    val train = withSplit.filter(col("__train")).drop("__train")
-    val test = withSplit.filter(!col("__train")).drop("__train")
     val rxnHash = md5(concat_ws(".",
       array_sort(concat(col("reactants"), col("products")))))
-    Relational.leakageMove(train, test, rxnHash)
+    Relational.leakageMove(df, bucket < (cfg.trainSize * 100).toInt, rxnHash)
   }
 }

@@ -2,8 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.Chemistry
+import graft.plans.Md5Bucket60
 
 /** F1/F2 — the gen_fp stage (gen_fp/fingerprints.py:37-99): per-molecule
   * fingerprints and the reaction-difference feature matrix.
@@ -30,16 +32,19 @@ object Fingerprints {
     */
   final case class FpRow(original_index: Long, fp: Seq[Int])
 
+  private val fpSeed = "fpb".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
   /** The one scatter kernel both dense paths share — any fix here keeps
-    * them bit-identical by construction. Null → zero vector. */
+    * them bit-identical by construction. Null → zero vector. Each 3-gram
+    * is `bucketHash("fpb", gram)`, hashed straight from its UTF-8 bytes. */
   private def fpOf(s: String, nBits: Int): Array[Int] = {
     val fp = new Array[Int](nBits)
     if (s != null) {
       val n = math.max(s.length - 2, 1)
       var i = 0
       while (i < n) {
-        val gram = s.substring(i, math.min(i + 3, s.length))
-        val b = (graft.functions.XHash.bucketHashJvm("fpb", gram) % nBits).toInt
+        val gram = UTF8String.fromString(s.substring(i, math.min(i + 3, s.length)))
+        val b = (Md5Bucket60.computeSeeded(fpSeed, gram) % nBits).toInt
         fp(b) = 1
         i += 1
       }

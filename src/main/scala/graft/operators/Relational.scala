@@ -52,20 +52,22 @@ object Relational {
     * membership in both splits moves those test rows to train; the author
     * comment flags the pandas version as the 15-minute hot spot).
     *
-    * Spark shape: a left-semi join of test against the distinct train keys
-    * finds the movers, a left-anti join keeps the rest. At 100 TB the train
-    * key set is large, so this is a shuffle hash join on the leak key (NOT a
-    * broadcast); AQE converts it to broadcast automatically when the
-    * distinct-key side is small. Replaces the O(n) python set loop with two
-    * distributed joins. Returns (train ++ movedTest, remainingTest).
+    * Spark shape: one window partitioned by the leak key. A row ends in
+    * train when it is a train row, or when its key is non-null and some row
+    * with that key is a train row (`max(isTrain)` over the key); train and
+    * test are the two filters on that flag. So the move is one hash
+    * exchange on the leak key: no distinct key set, no semi/anti join pair,
+    * no union. A null key never moves a row. `isTrain` must be non-null.
+    * Returns (train ++ movedTest, remainingTest).
     */
-  def leakageMove(train: DataFrame, test: DataFrame, leakKey: Column)
+  def leakageMove(df: DataFrame, isTrain: Column, leakKey: Column)
       : (DataFrame, DataFrame) = {
-    val trainKeys = train.select(leakKey.as("__lk")).distinct()
-    val t = test.withColumn("__lk", leakKey)
-    val moved = t.join(trainKeys, Seq("__lk"), "left_semi").drop("__lk")
-    val kept = t.join(trainKeys, Seq("__lk"), "left_anti").drop("__lk")
-    (train.unionByName(moved), kept)
+    val flagged = df.withColumn("__train", isTrain).withColumn("__lk", leakKey)
+      .withColumn("__to_train", col("__train") || (col("__lk").isNotNull &&
+        max(col("__train")).over(Window.partitionBy("__lk"))))
+      .drop("__train", "__lk")
+    (flagged.filter(col("__to_train")).drop("__to_train"),
+      flagged.filter(!col("__to_train")).drop("__to_train"))
   }
 
   /** C9 — cumulative value counts across several columns (ref:

@@ -62,7 +62,7 @@ object CleanerQueries {
 
     // C20 — split-leakage move: test rows whose leak key (o_custkey) occurs
     // in train move to train (clean/cleaner.py:885-945, the reference's
-    // 15-minute pandas hot spot → two distributed joins here).
+    // 15-minute pandas hot spot → one window over the leak key here).
     QueryDef(
       "q14_leakage_move",
       s"""WITH o AS (
@@ -77,10 +77,7 @@ object CleanerQueries {
          |FROM o""".stripMargin) { (s, dir) =>
       val b = Relational.splitBucket("split12345", col("o_orderkey"))
       val o = Tables.orders(s, dir)
-        .withColumn("split", when(b < 90, "train").otherwise("test"))
-      val train = o.filter(col("split") === "train")
-      val test = o.filter(col("split") === "test")
-      val (newTrain, newTest) = Relational.leakageMove(train, test, col("o_custkey"))
+      val (newTrain, newTest) = Relational.leakageMove(o, b < 90, col("o_custkey"))
       newTrain.select(col("o_orderkey"), lit("train").as("final_split"))
         .unionByName(newTest.select(col("o_orderkey"), lit("test").as("final_split")))
     },
